@@ -129,20 +129,29 @@ def _apply(settings: dict) -> None:
 
 
 def _stop_jvm() -> None:
-    """Stop the Spark driver JVM this run started and wait until it has
-    exited; the Python workers it forked exit with it."""
+    """Stop the Spark driver JVM this run started and wait until it and
+    the Python workers it forked have exited."""
     from pyspark import SparkContext
+
+    from perfbench.tracing import descendants
 
     if SparkContext._active_spark_context is not None:
         SparkContext._active_spark_context.stop()
     gateway = SparkContext._gateway
     if gateway is None:
         return
+    # workers outlive the JVM briefly and are reparented when it exits,
+    # so they are listed while they are still this process's descendants
+    started = descendants()
     gateway.shutdown()
     proc = getattr(gateway, "proc", None)
     if proc is not None:
         proc.stdin.close()  # the JVM exits on EOF from its parent
         proc.wait(timeout=60)
+    deadline = time.perf_counter() + 30
+    while (any(os.path.exists(f"/proc/{pid}") for pid in started)
+           and time.perf_counter() < deadline):
+        time.sleep(0.1)
 
 
 def _metric(value: float, unit: str) -> dict:
