@@ -9,9 +9,10 @@ The collected rows are then verified against the query's cached DuckDB
 oracle, outside the timed span.
 
 A run is whole passes over the workload's op list, each pass in an
-order drawn from the seed. Another pass starts only if the previous
-one would still fit in ``--seconds``, so every run measures the same
-op mix and the number of samples depends only on speed.
+order drawn from the seed. The number of passes follows from
+``--seconds`` alone (one per ``NOMINAL_PASS_S``), never from measured
+speed, so every run of a given length takes the same samples and
+reports the same tail percentile, on a parent and a change alike.
 """
 
 from __future__ import annotations
@@ -28,32 +29,28 @@ from perfbench.tracing import RssSampler, job_counts, parse_event_log, \
 # costs the other moves the same run. The families are reported apart
 # in the traced run (queries.* covers every op, pipeline.* the second).
 #
-# The data-bound JVM path: scan, hash/sort-merge join, aggregate,
-# shuffle, window sort, iteration (legacy headline TPC-H, relational,
-# OVER/TopN, batch-window, interval/as-of join and graph queries).
+# The data-bound JVM path: scan, hash and broadcast join, aggregate,
+# shuffle, window sort, iteration (TPC-H, relational join and rollup,
+# OVER/TopN, batch-window, interval-join and graph queries).
 OLAP_OPS = (
-    "tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6", "tpch_q9", "tpch_q18",
-    "tpch_q21", "join_inner_shuffle", "agg_grouping_sets",
+    "tpch_q3", "tpch_q6", "join_broadcast", "agg_rollup",
     "over_rows_unbounded_preceding", "rank_topn_per_group",
-    "window_hop_agg", "window_session_agg",
-    "interval_join_batch", "asof_join_batch",
-    "graph_connected_components",
+    "window_hop_agg", "interval_join_batch", "graph_connected_components",
 )
-# The LLM-data faces: eager build jobs and the guarded widen on
-# single-split scans (pipeline/, _sizing).
-LLM_OPS = (
-    "dedup_minhash_lsh", "dedup_simhash", "text_fingerprint",
-    "ann_ivf_topk", "boilerplate_ngrams", "pipeline_end_to_end",
-)
+# The LLM-data faces: vector top-k, text hashing and the guarded widen
+# on single-split scans (boilerplate_ngrams; pipeline/, _sizing).
+LLM_OPS = ("text_fingerprint", "ann_bruteforce_topk", "boilerplate_ngrams")
 OPS = OLAP_OPS + LLM_OPS
+# One warm pass over OPS takes about 9 s on a quiet 4-core host, so a
+# 24 s run is three passes: 36 samples, each op sampled three times,
+# and a tail at p70 with ten samples beyond it.
+NOMINAL_PASS_S = 8.0
 
-# Untimed warm-up ops, none of them timed later, so no timed op finds
-# its generated code already compiled. With less warm-up the first four
-# or five timed ops (about 6 s of work) ran 30-100% over their later
-# latency, which made the median depend on which ops the seed put first.
-WARMUP = ("tpch_q13", "tpch_q10", "window_tumble_agg",
-          "corpus_bpe_pair_counts", "ann_bruteforce_topk",
-          "corpus_contamination")
+# Set-up ends with one untimed pass over OPS: the first run of each
+# query pays its code generation and the JVM's JIT, and took up to
+# twice its later latency, so a timed first pass made the figures
+# depend on how much of that cost the host happened to absorb. That
+# cost is counted in setup_s instead.
 
 PIPELINE_MODULE = "flink_1_11_2_with_comments_spark.queries.pipeline_ops"
 
@@ -109,7 +106,7 @@ def run(ctx) -> dict:
     if ctx.trace:
         probe.install()
 
-    # --- set-up: session, catalog, untimed warm-up ops ---------------
+    # --- set-up: session, catalog, one untimed warm-up pass ----------
     t0 = time.perf_counter()
     spark = get_spark(f"perfbench-{ctx.workload}")
     session_s = time.perf_counter() - t0
@@ -118,7 +115,7 @@ def run(ctx) -> dict:
         for table in catalog.TPCH_TABLES:
             catalog.load_table(spark, ctx.tables_dir, table).schema
     with tracer.span("warmup"):
-        for name in WARMUP:
+        for name in OPS:
             specs[name].fn(spark, ctx.tables_dir).toPandas()
             release_persisted(spark)
         wait_for_jit(spark)
@@ -133,20 +130,19 @@ def run(ctx) -> dict:
     # --- timed phase -------------------------------------------------
     sc = spark.sparkContext
     rng = random.Random(ctx.seed)
+    passes = max(1, round(ctx.seconds / NOMINAL_PASS_S))
     ops: list[dict] = []
     start = time.perf_counter()
-    last_pass = 0.0
     with RssSampler() as rss:
-        while (not ops or time.perf_counter() - start + last_pass
-               <= ctx.seconds):
-            pass_start = time.perf_counter()
+        for _ in range(passes):
             order = list(OPS)
             rng.shuffle(order)
             for name in order:
                 ops.append(_one_op(ctx, spark, sc, specs[name], len(ops),
                                    expected[name], probe))
-            last_pass = time.perf_counter() - pass_start
     wall_s = time.perf_counter() - start
+    # the harness's own result check is not the program's time
+    timed_s = wall_s - sum(op["verify_s"] for op in ops)
 
     spark.stop()  # also closes the event log the traced run reads
     layer = {}
@@ -156,16 +152,16 @@ def run(ctx) -> dict:
         layer = _layer_metrics(ctx, ops, session_s)
     ok = [op for op in ops if op["ok"]]
     lat = stats.summary([op["latency_s"] for op in ok]) if ok else None
-    busy = sum(op["latency_s"] for op in ok)
     return {
         "attempted": len(ops), "failed": len(ops) - len(ok),
         "errors": [(op["name"], op["error"]) for op in ops if not op["ok"]],
         "setup_s": setup_s, "peak_rss_mb": rss.peak_bytes / 2**20,
-        "wall_s": wall_s, "passes": len(ops) // len(OPS),
+        "wall_s": wall_s, "timed_s": timed_s, "passes": passes,
         "latency": lat,
-        "ops_per_min": 60.0 * len(ok) / busy if busy else 0.0,
+        "ops_per_min": 60.0 * len(ok) / timed_s,
         "per_op": [{k: op[k] for k in ("name", "latency_s", "build_s",
-                                       "run_s", "ok")} for op in ops],
+                                       "run_s", "verify_s", "ok")}
+                   for op in ops],
         "layer": layer,
     }
 
@@ -175,7 +171,7 @@ def _one_op(ctx, spark, sc, spec, idx, expected, probe) -> dict:
 
     release_persisted(spark)
     rec = {"name": spec.name, "op": idx, "ok": False, "error": None,
-           "build_s": 0.0, "run_s": 0.0, "latency_s": 0.0}
+           "build_s": 0.0, "run_s": 0.0, "latency_s": 0.0, "verify_s": 0.0}
     group = f"op{idx}"
     try:
         with ctx.tracer.span("op", op=idx):
@@ -192,6 +188,7 @@ def _one_op(ctx, spark, sc, spec, idx, expected, probe) -> dict:
                 t2 = time.perf_counter()
         rec.update(build_s=t1 - t0, run_s=t2 - t1, latency_s=t2 - t0)
         rec["error"] = verify(spec.name, got, expected)
+        rec["verify_s"] = time.perf_counter() - t2
         rec["ok"] = rec["error"] is None
     except Exception:  # an op that raises counts as failed, run goes on
         rec["error"] = traceback.format_exc(limit=3)

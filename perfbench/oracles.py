@@ -44,34 +44,11 @@ class _Answer:
         return self._pdf
 
 
-def _identical(got: pd.DataFrame, expected: pd.DataFrame) -> bool:
-    """Same columns and, once both are sorted, exactly equal cells.
-    Exact equality implies ``compare`` passes, so ``verify`` skips its
-    per-cell Python loop when this holds; anything less goes through
-    ``compare`` and its tolerance."""
-    cols = sorted(got.columns)
-    if cols != sorted(expected.columns) or len(got) != len(expected):
-        return False
-    # pandas equates None and NaN; compare does not, so it decides
-    if got.isna().to_numpy().any() or expected.isna().to_numpy().any():
-        return False
-    try:
-        a = got[cols].sort_values(cols).reset_index(drop=True)
-        b = expected[cols].sort_values(cols).reset_index(drop=True)
-        pd.testing.assert_frame_equal(a, b, check_dtype=False,
-                                      check_exact=True)
-    except (AssertionError, TypeError, ValueError):
-        return False
-    return True
-
-
 def verify(name: str, got: pd.DataFrame, expected: pd.DataFrame) -> str | None:
     """None when ``got`` matches ``expected`` under parity.compare's
     tolerance; otherwise the mismatch report."""
     from tests.parity import compare
 
-    if _identical(got, expected):
-        return None
     out = io.StringIO()
     try:
         with contextlib.redirect_stdout(out):

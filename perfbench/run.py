@@ -1,7 +1,7 @@
-"""Repository benchmark: three workloads against the package's public
+"""Repository benchmark: two workloads against the package's public
 entry points, every result verified.
 
-    python3 perfbench/run.py --workload batch_ops --seed 1 --seconds 30 \
+    python3 perfbench/run.py --workload batch_ops --seed 1 --seconds 24 \
         --trace 0
 
 Workloads (see BENCHMARK.json for why each was chosen):
@@ -194,6 +194,7 @@ def report(workload: str, res: dict) -> tuple[dict, dict]:
 
 def run_one(args) -> int:
     from perfbench import inputs
+    from perfbench.tracing import cpu_jiffies
 
     cpus = len(os.sched_getaffinity(0))
     cache = os.path.join(ROOT, ".perfbench", "cache")
@@ -208,12 +209,14 @@ def run_one(args) -> int:
     _apply(settings)
     ctx = Context(args, tables_dir, work_dir, cpus)
     ctx.exclude_from_setup(generated_s)
+    steal0, total0 = cpu_jiffies()
     try:
         if args.workload == "event_stream":
             from perfbench import event_stream as workload
         else:
             from perfbench import closed_loop as workload
         res = workload.run(ctx)
+        steal1, total1 = cpu_jiffies()
     finally:
         _stop_jvm()
         ctx.oracles.close()
@@ -224,6 +227,7 @@ def run_one(args) -> int:
                                  f"-trace{args.trace}")
     extra = {"workload": args.workload, "seed": args.seed,
              "seconds": args.seconds, "settings": settings,
+             "host_steal_share": (steal1 - steal0) / max(1, total1 - total0),
              "metrics": named, "errors": res["errors"]}
     if args.trace:
         units = _per_layer_units()

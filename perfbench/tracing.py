@@ -154,6 +154,16 @@ def descendants_rss() -> int:
     return total
 
 
+def cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) CPU time of the whole machine so far, from
+    /proc/stat. Steal is time the hypervisor gave this machine's
+    virtual CPUs to another guest; a run with a large share of it was
+    slowed by its neighbours, not by the program."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:9]]
+    return fields[7], sum(fields)
+
+
 def job_counts(sc, group: str) -> dict:
     """Jobs, stages that ran, and tasks completed under a job group."""
     st = sc.statusTracker()
