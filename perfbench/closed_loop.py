@@ -5,8 +5,11 @@ may already run eager jobs) followed by one materializing action,
 ``toPandas()`` with Arrow, which computes every output column -- a
 ``count()`` would let Catalyst prune the columns it claims to time.
 The two are timed as separate spans; their sum is the op latency.
-The collected rows are then verified against the query's cached DuckDB
-oracle, outside the timed span.
+The op's CPU time is what the engine's processes and this client's
+thread spend over the same span (see ``tracing.engine_cpu``); its cost
+is that over the run's mean reference-task time, sampled before each
+op. The collected rows are then verified against the query's cached
+DuckDB oracle, outside the timed span.
 
 A run is whole passes over the workload's op list, each pass in an
 order drawn from the seed. The number of passes follows from
@@ -22,8 +25,8 @@ import time
 import traceback
 
 from perfbench import stats
-from perfbench.tracing import RssSampler, job_counts, parse_event_log, \
-    wait_for_jit, wrap_calls
+from perfbench.tracing import ReferenceWork, RssSampler, engine_cpu, \
+    job_counts, parse_event_log, wrap_calls
 
 # One closed loop over two op families, so a change that helps one and
 # costs the other moves the same run. The families are reported apart
@@ -42,15 +45,12 @@ OLAP_OPS = (
 LLM_OPS = ("text_fingerprint", "ann_bruteforce_topk", "boilerplate_ngrams")
 OPS = OLAP_OPS + LLM_OPS
 # One warm pass over OPS takes about 9 s on a quiet 4-core host, so a
-# 24 s run is three passes: 36 samples, each op sampled three times,
-# and a tail at p70 with ten samples beyond it.
-NOMINAL_PASS_S = 8.0
+# 20 s run is two passes: 24 samples, each op sampled twice.
+NOMINAL_PASS_S = 10.0
 
 # Set-up ends with one untimed pass over OPS: the first run of each
-# query pays its code generation and the JVM's JIT, and took up to
-# twice its later latency, so a timed first pass made the figures
-# depend on how much of that cost the host happened to absorb. That
-# cost is counted in setup_s instead.
+# query pays its code generation and class loading, and took up to
+# twice its later latency. That cost is counted in setup_s instead.
 
 PIPELINE_MODULE = "flink_1_11_2_with_comments_spark.queries.pipeline_ops"
 
@@ -118,10 +118,10 @@ def run(ctx) -> dict:
         for name in OPS:
             specs[name].fn(spark, ctx.tables_dir).toPandas()
             release_persisted(spark)
-        wait_for_jit(spark)
     probe.take()
     t0 = time.perf_counter()
     expected = {n: ctx.oracles.answer(n, specs[n].oracle) for n in OPS}
+    ref = ReferenceWork(spark)
     ctx.exclude_from_setup(time.perf_counter() - t0)
     # the timed phase starts from a collected heap, not the warm-up's
     spark.sparkContext._jvm.System.gc()
@@ -132,17 +132,29 @@ def run(ctx) -> dict:
     rng = random.Random(ctx.seed)
     passes = max(1, round(ctx.seconds / NOMINAL_PASS_S))
     ops: list[dict] = []
+    ref_wall_s = 0.0
+    (cpu0, jit0), main0 = engine_cpu(), time.thread_time()
     start = time.perf_counter()
     with RssSampler() as rss:
         for _ in range(passes):
             order = list(OPS)
             rng.shuffle(order)
             for name in order:
+                t0 = time.perf_counter()
+                ref.measure()
+                ref_wall_s += time.perf_counter() - t0
                 ops.append(_one_op(ctx, spark, sc, specs[name], len(ops),
                                    expected[name], probe))
     wall_s = time.perf_counter() - start
-    # the harness's own result check is not the program's time
-    timed_s = wall_s - sum(op["verify_s"] for op in ops)
+    main_s = time.thread_time() - main0
+    cpu1, jit1 = engine_cpu()
+    cpu_s = cpu1 - cpu0
+    # the harness's own work, result checks and the reference, is not
+    # the program's time
+    timed_s = wall_s - ref_wall_s - sum(op["verify_s"] for op in ops)
+    cpu_s += (main_s - sum(op["verify_cpu_s"] for op in ops)
+              - sum(ref.samples))
+    ref_s = ref.mean()
 
     spark.stop()  # also closes the event log the traced run reads
     layer = {}
@@ -152,15 +164,22 @@ def run(ctx) -> dict:
         layer = _layer_metrics(ctx, ops, session_s)
     ok = [op for op in ops if op["ok"]]
     lat = stats.summary([op["latency_s"] for op in ok]) if ok else None
+    cpu = stats.summary([op["cpu_s"] for op in ok]) if ok else None
+    costs = [op["cpu_s"] / ref_s for op in ok]
     return {
         "attempted": len(ops), "failed": len(ops) - len(ok),
         "errors": [(op["name"], op["error"]) for op in ops if not op["ok"]],
         "setup_s": setup_s, "peak_rss_mb": rss.peak_bytes / 2**20,
         "wall_s": wall_s, "timed_s": timed_s, "passes": passes,
-        "latency": lat,
+        "latency": lat, "cpu": cpu, "cpu_s": cpu_s, "jit_cpu_s": jit1 - jit0,
         "ops_per_min": 60.0 * len(ok) / timed_s,
+        "cpu_s_per_op": cpu_s / len(ok) if ok else 0.0,
+        "ref_cpu_s": ref_s, "ref_samples": ref.samples,
+        "cost": stats.summary(costs) if ok else None,
+        "cost_geomean": stats.geomean(costs) if ok else 0.0,
+        "cost_per_op": cpu_s / len(ok) / ref_s if ok else 0.0,
         "per_op": [{k: op[k] for k in ("name", "latency_s", "build_s",
-                                       "run_s", "verify_s", "ok")}
+                                       "run_s", "cpu_s", "verify_s", "ok")}
                    for op in ops],
         "layer": layer,
     }
@@ -171,12 +190,15 @@ def _one_op(ctx, spark, sc, spec, idx, expected, probe) -> dict:
 
     release_persisted(spark)
     rec = {"name": spec.name, "op": idx, "ok": False, "error": None,
-           "build_s": 0.0, "run_s": 0.0, "latency_s": 0.0, "verify_s": 0.0}
+           "build_s": 0.0, "run_s": 0.0, "latency_s": 0.0, "cpu_s": 0.0,
+           "verify_s": 0.0, "verify_cpu_s": 0.0}
     group = f"op{idx}"
     try:
         with ctx.tracer.span("op", op=idx):
             if ctx.trace:
                 sc.setJobGroup(group + ":build", spec.name)
+            cpu0 = engine_cpu()[0]
+            main0 = time.thread_time()
             with ctx.tracer.span("queries.build", op=idx):
                 t0 = time.perf_counter()
                 df = spec.fn(spark, ctx.tables_dir)
@@ -186,9 +208,13 @@ def _one_op(ctx, spark, sc, spec, idx, expected, probe) -> dict:
             with ctx.tracer.span("queries.run", op=idx):
                 got = df.toPandas()
                 t2 = time.perf_counter()
-        rec.update(build_s=t1 - t0, run_s=t2 - t1, latency_s=t2 - t0)
+            main1 = time.thread_time()
+            cpu1 = engine_cpu()[0]
+        rec.update(build_s=t1 - t0, run_s=t2 - t1, latency_s=t2 - t0,
+                   cpu_s=cpu1 - cpu0 + main1 - main0)
         rec["error"] = verify(spec.name, got, expected)
         rec["verify_s"] = time.perf_counter() - t2
+        rec["verify_cpu_s"] = time.thread_time() - main1
         rec["ok"] = rec["error"] is None
     except Exception:  # an op that raises counts as failed, run goes on
         rec["error"] = traceback.format_exc(limit=3)

@@ -1,11 +1,8 @@
-"""Open-loop streaming workload.
+"""Streaming workload: a paced file feed through one streaming job.
 
 Slices of the ``events`` table are written as parquet files with
-pyarrow, never Spark, before the timed phase; a generator thread then
-publishes each into the watched directory on a fixed schedule,
-whatever the engine is doing: a steady phase, a stall, then a burst.
-One job of three Structured Streaming queries reads them through a
-file stream source:
+pyarrow, never Spark, before the timed phase. One job of three
+Structured Streaming queries reads them through a file stream source:
 
 - ``tumble``: a watermarked one-hour ``streaming.tumble`` aggregate,
   append mode;
@@ -14,12 +11,24 @@ file stream source:
 - ``topn``: ``streaming.topn.streaming_topn`` (a ``keyed_process``
   operator) keeping the top three values per event type.
 
-An op is one input file. Its latency runs from when the generator was
-due to write it to the end of the last micro-batch, across the three
-queries, that consumed it; latency percentiles are over the steady
-phase, whose offered rate is below the job's capacity. The burst is
-measured by its catch-up rate: its events over the time from its due
-time to the end of the micro-batch that finished draining it.
+The feed publishes one group of files at a time and waits until every
+query has processed it before it publishes the next: first a steady
+phase of single files, then one burst of ``n_burst`` files at once. A
+group appears by renaming its directory into the watched one, so the
+source sees all of it or none of it, and every run cuts the same
+micro-batches: one per steady file and query, and batches of
+``MAX_FILES_PER_TRIGGER`` through the burst. The per-batch costs this
+workload exists for (planning, the offset and commit logs, state-store
+commits) are then the same work in every run, and how fast the host
+happens to be cannot change how many batches there are.
+
+An op is one steady file. Its CPU time is what the engine's processes
+spend from its publication until every query has processed it, and
+its cost that over the run's mean reference-task time; its
+latency runs from its publication to the end of the last micro-batch,
+across the three queries, that consumed it. The burst is measured by
+its catch-up rate: its events over the time from its publication to
+the end of the micro-batch that finished draining it.
 
 The stream's disorder is built so that every expected output is fixed
 by the files alone, whatever the batching: displaced and duplicated
@@ -35,7 +44,6 @@ import datetime as dt
 import glob
 import json
 import os
-import threading
 import time
 import traceback
 
@@ -46,16 +54,23 @@ import pyarrow.parquet as pq
 
 from perfbench import stats
 from perfbench.oracles import verify
-from perfbench.tracing import RssSampler, wait_for_jit
+from perfbench.tracing import ReferenceWork, RssSampler, engine_cpu
 
 EVENTS_PER_FILE = 125
-PERIOD_S = 0.25           # steady phase: 500 events/s
-STEADY_SHARE = 0.5        # of --seconds spent in the steady phase
-# the stall outlasts the steady phase's latency, so the burst lands on
-# an idle job and its drain time is the engine's alone
-STALL_SHARE = 0.25
-BURST_PER_STEADY = 1.0    # burst files per steady-phase file
-MAX_FILES_PER_TRIGGER = 16
+STEADY_PER_10S = 2        # steady files per 10 s of --seconds
+BURST_PER_STEADY = 4      # burst files per steady-phase file
+WARMUP_SECONDS = 10       # the warm-up job's plan: 2 steady, a burst of 8
+# Each publication is a directory the source's glob lists on every poll;
+# past 32 paths Spark lists them with a distributed job per poll, which
+# would change the per-batch cost the workload measures.
+MAX_GROUPS = 32
+# An idle query lists the source on every trigger; with the default
+# trigger that is every 10 ms per query, half a core for the idle job,
+# and its cost would grow with the wall time a file takes to go through.
+TRIGGER = "100 milliseconds"
+AWAIT_TIMEOUT_S = 120.0
+REF_PER_GROUP = 8         # reference-work samples before each group
+MAX_FILES_PER_TRIGGER = 8
 WATERMARK_DELAY_S = 600   # catalog.WATERMARKS["events"]: 10 minutes
 DISPLACE_WINDOW_S = WATERMARK_DELAY_S // 2
 # late-row filtering uses the previous batch's watermark, so a batch's
@@ -72,13 +87,14 @@ SCHEMA = pa.schema([
 
 
 class StreamPlan:
-    """The files, their schedule and what each query must emit."""
+    """The files, how they are grouped for publication and what each
+    query must emit."""
 
     def __init__(self, events: pa.Table, seed: int, seconds: int):
         rng = np.random.default_rng(seed)
-        self.n_steady = max(2, int(seconds * STEADY_SHARE / PERIOD_S))
-        self.n_burst = max(1, int(self.n_steady * BURST_PER_STEADY))
-        self.stall_s = seconds * STALL_SHARE
+        self.n_steady = min(max(2, seconds * STEADY_PER_10S // 10),
+                            MAX_GROUPS - 1)
+        self.n_burst = self.n_steady * BURST_PER_STEADY
         n = self.n_steady + self.n_burst
         start = int(rng.integers(0, events.num_rows
                                  - (n + 1) * EVENTS_PER_FILE))
@@ -103,7 +119,8 @@ class StreamPlan:
                 copied[dup] = True
             if k + LATE_GAP < n:
                 cand = rows[(dest[rows] == k) & ~copied[rows]]
-                pick = cand[rng.random(len(cand)) < LATE_SHARE]
+                pick = rng.choice(cand, max(1, int(len(cand) * LATE_SHARE)),
+                                  replace=False)
                 dest[pick] = k + LATE_GAP
                 late.extend(int(r) for r in pick)
         self.files: list[pa.Table] = []
@@ -116,11 +133,11 @@ class StreamPlan:
             pa.array(late, pa.int64())).to_pylist())
         self.burst_events = sum(t.num_rows for t in self.files[-self.n_burst:])
 
-    def due_offsets(self) -> list[float]:
-        """Seconds after the schedule origin each file is due."""
-        steady = [k * PERIOD_S for k in range(self.n_steady)]
-        burst_at = self.n_steady * PERIOD_S + self.stall_s
-        return steady + [burst_at] * self.n_burst
+    def groups(self) -> list[list[int]]:
+        """File indices per publication: one per steady file, then the
+        burst."""
+        return ([[k] for k in range(self.n_steady)]
+                + [list(range(self.n_steady, len(self.files)))])
 
     def delivered(self) -> pd.DataFrame:
         df = pa.concat_tables(self.files).to_pandas()
@@ -165,7 +182,7 @@ def _start_job(spark, watch_dir: str, ckpt_root: str, tag: str) -> dict:
         T.StructField("props", T.StringType())])
     src = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
-           .parquet(watch_dir))
+           .parquet(os.path.join(watch_dir, "*")))
     wm = catalog.watermarked(src, "events")
     tumble = (wm.groupBy(streaming.tumble("ts", "1 hour").alias("w"),
                          "event_type")
@@ -182,6 +199,7 @@ def _start_job(spark, watch_dir: str, ckpt_root: str, tag: str) -> dict:
     }
     return {name: (df.writeStream.format("memory")
                    .queryName(f"{tag}_{name}").outputMode(mode)
+                   .trigger(processingTime=TRIGGER)
                    .option("checkpointLocation",
                            os.path.join(ckpt_root, f"{tag}-{name}"))
                    .start())
@@ -192,43 +210,86 @@ def _file_name(k: int) -> str:
     return f"part-{k:05d}.parquet"
 
 
-def _stage(files: list[pa.Table], staging: str) -> None:
-    """Write every file where the source cannot see it."""
-    for k, table in enumerate(files):
-        pq.write_table(table, os.path.join(staging, _file_name(k)))
+def _group_dir(g: int) -> str:
+    return f"pub-{g:05d}"
 
 
-def _publish(staging: str, watch_dir: str, k: int, mtime: float) -> None:
-    """Move a staged file in with an mtime that keeps the source's
-    oldest-first order. A rename is atomic, so a burst becomes visible
-    at once instead of trickling in while the source lists it."""
-    tmp = os.path.join(staging, _file_name(k))
-    os.utime(tmp, (mtime, mtime))
-    os.rename(tmp, os.path.join(watch_dir, _file_name(k)))
+def _stage(plan: StreamPlan, staging: str) -> None:
+    """Write every file, one directory per publication, where the
+    source cannot see it."""
+    for g, ks in enumerate(plan.groups()):
+        os.makedirs(os.path.join(staging, _group_dir(g)))
+        for k in ks:
+            pq.write_table(plan.files[k], os.path.join(
+                staging, _group_dir(g), _file_name(k)))
 
 
-class Generator(threading.Thread):
-    """Publishes each staged file when it is due, regardless of the
-    engine."""
+def _publish(staging: str, watch_dir: str, g: int) -> None:
+    """Move a staged group in with one rename, which is atomic, so the
+    source lists all of it or none of it. Modification times keep the
+    source's oldest-first order within and across groups."""
+    src = os.path.join(staging, _group_dir(g))
+    now = time.time()
+    for i, name in enumerate(sorted(os.listdir(src))):
+        os.utime(os.path.join(src, name), (now + i * 1e-3,) * 2)
+    os.rename(src, os.path.join(watch_dir, _group_dir(g)))
 
-    def __init__(self, plan: StreamPlan, staging: str, watch_dir: str,
-                 origin: float):
-        super().__init__(daemon=True)
-        self.staging, self.watch_dir = staging, watch_dir
-        self.due = [origin + d for d in plan.due_offsets()]
-        self.written = [0.0] * len(self.due)
-        self.error: str | None = None
 
-    def run(self) -> None:
+def _log_entries(log_dir: str, b: int) -> list[dict] | None:
+    """Entries of the file source's log batch ``b``, or None while it is
+    not written (every tenth batch is a compaction holding all earlier
+    entries too)."""
+    for name in (str(b), f"{b}.compact"):
         try:
-            for k, due in enumerate(self.due):
-                wait = due - time.time()
-                if wait > 0:
-                    time.sleep(wait)
-                _publish(self.staging, self.watch_dir, k, due + k * 1e-3)
-                self.written[k] = time.time()
-        except Exception:
-            self.error = traceback.format_exc(limit=3)
+            with open(os.path.join(log_dir, name)) as f:
+                lines = f.read().splitlines()[1:]
+        except FileNotFoundError:
+            continue
+        entries = [json.loads(line) for line in lines]
+        return [e for e in entries if e["batchId"] == b]
+    return None
+
+
+class Feed:
+    """Publishes one group at a time and waits until every query has
+    processed it."""
+
+    def __init__(self, queries: dict, ckpts: dict, staging: str,
+                 watch_dir: str):
+        self.queries, self.staging, self.watch_dir = (queries, staging,
+                                                      watch_dir)
+        self.logs = {q: os.path.join(ckpts[q], "sources", "0")
+                     for q in queries}
+        self.next_log = {q: 0 for q in queries}
+
+    def publish_and_wait(self, g: int, names: list[str]) -> dict:
+        cpu0 = engine_cpu()[0]
+        t0 = time.time()
+        _publish(self.staging, self.watch_dir, g)
+        self._await(set(names))
+        done = time.time()
+        return {"written": t0, "done": done, "cpu_s": engine_cpu()[0] - cpu0}
+
+    def _await(self, names: set[str]) -> None:
+        """Wait until each query's source has logged every file of the
+        group, then until the query has processed all it has. Calling
+        ``processAllAvailable`` only once the files are logged keeps a
+        poll that listed the directory before the rename from ending
+        the wait early."""
+        deadline = time.perf_counter() + AWAIT_TIMEOUT_S
+        for q, query in self.queries.items():
+            pending = set(names)
+            while pending:
+                entries = _log_entries(self.logs[q], self.next_log[q])
+                if entries is None:
+                    if time.perf_counter() > deadline:
+                        raise TimeoutError(f"{q}: files never consumed: "
+                                           f"{sorted(pending)}")
+                    time.sleep(0.002)
+                    continue
+                pending -= {os.path.basename(e["path"]) for e in entries}
+                self.next_log[q] += 1
+            query.processAllAvailable()
 
 
 def _source_batches(ckpt: str) -> dict[str, int]:
@@ -254,38 +315,61 @@ def _end_time(p: dict) -> float:
     return start + p["durationMs"].get("triggerExecution", 0) / 1e3
 
 
-def _consumed_at(query, ckpt: str, names: list[str]) -> list[float | None]:
-    """End time of the micro-batch that consumed each file."""
+def _consumed_at(progress: list[dict], ckpt: str,
+                 names: list[str]) -> list[tuple[float, float] | None]:
+    """(start, end) of the micro-batch that consumed each file."""
     log_batch = _source_batches(ckpt)
-    end_of = {}
-    for p in _progress(query):
+    span_of = {}
+    for p in progress:
         end = p["sources"][0].get("endOffset")
         if p["numInputRows"] > 0 and end:
-            end_of[json.loads(end)["logOffset"]
-                   if isinstance(end, str) else end["logOffset"]] = \
-                _end_time(p)
-    return [end_of.get(log_batch.get(n)) for n in names]
+            stop = _end_time(p)
+            span_of[json.loads(end)["logOffset"]
+                    if isinstance(end, str) else end["logOffset"]] = (
+                stop - p["durationMs"].get("triggerExecution", 0) / 1e3,
+                stop)
+    return [span_of.get(log_batch.get(n)) for n in names]
 
 
-def _drain(queries: dict) -> None:
-    for q in queries.values():
-        q.processAllAvailable()
-    for q in queries.values():
-        q.stop()
+def _feed_plan(spark, plan: StreamPlan, dirs: dict, tag: str, tracer,
+               ref: ReferenceWork | None = None) -> tuple:
+    """Start the job on an empty watched directory, feed it every group
+    of ``plan``, stop it; (queries, per-group records). With ``ref``,
+    the reference work is measured before each group, outside its
+    timing."""
+    watch = os.path.join(dirs["watch"], tag)
+    os.makedirs(watch)
+    with tracer.span("streaming.start"):
+        queries = _start_job(spark, watch, dirs["ckpt"], tag)
+    ckpts = {q: os.path.join(dirs["ckpt"], f"{tag}-{q}") for q in QUERIES}
+    feed = Feed(queries, ckpts, os.path.join(dirs["staging"], tag), watch)
+    recs = []
+    try:
+        for g, ks in enumerate(plan.groups()):
+            if ref is not None:
+                ref.measure(REF_PER_GROUP)
+            recs.append(feed.publish_and_wait(
+                g, [_file_name(k) for k in ks]))
+    finally:
+        with tracer.span("streaming.stop"):
+            for q in queries.values():
+                q.stop()
+    return queries, recs
 
 
 def run(ctx) -> dict:
     from flink_1_11_2_with_comments_spark.session import get_spark
 
     dirs = {d: os.path.join(ctx.work_dir, d)
-            for d in ("staging", "watch", "warm", "ckpt")}
+            for d in ("staging", "watch", "ckpt")}
     for d in dirs.values():
         os.makedirs(d, exist_ok=True)
     t0 = time.perf_counter()
     events = pq.read_table(os.path.join(ctx.tables_dir, "events.parquet"))
     plan = StreamPlan(events, ctx.seed, ctx.seconds)
-    _stage(StreamPlan(events, ctx.seed + 1, 2).files[:1], dirs["warm"])
-    _stage(plan.files, dirs["staging"])
+    warm = StreamPlan(events, ctx.seed + 1, WARMUP_SECONDS)
+    _stage(warm, os.path.join(dirs["staging"], "warm"))
+    _stage(plan, os.path.join(dirs["staging"], "run"))
     ctx.exclude_from_setup(time.perf_counter() - t0)
     tracer = ctx.tracer
 
@@ -296,26 +380,28 @@ def run(ctx) -> dict:
     tracer.add("session.get_spark", time.time() - session_s, time.time())
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     with tracer.span("warmup"):
-        _drain(_start_job(spark, dirs["warm"], dirs["ckpt"], "warm"))
-        wait_for_jit(spark)
+        _feed_plan(spark, warm, dirs, "warm", tracer)
+    t0 = time.perf_counter()
+    ref = ReferenceWork(spark)
+    ctx.exclude_from_setup(time.perf_counter() - t0)
+    spark.sparkContext._jvm.System.gc()
     setup_s = ctx.setup_elapsed()
 
     # --- timed phase -------------------------------------------------
     failed: list[tuple[str, str]] = []
-    with RssSampler() as rss:
-        with tracer.span("streaming.start"):
-            queries = _start_job(spark, dirs["watch"], dirs["ckpt"], "run")
-        gen = Generator(plan, dirs["staging"], dirs["watch"],
-                        time.time() + 0.5)
-        gen.start()
-        gen.join()
-        with tracer.span("streaming.drain_and_stop"):
-            try:
-                _drain(queries)
-            except Exception:
-                failed.append(("job", traceback.format_exc(limit=3)))
-    if gen.error:
-        failed.append(("generator", gen.error))
+    queries, recs = {}, []
+    jit0 = engine_cpu()[1]
+    with RssSampler() as rss, tracer.span("streaming.feed"):
+        try:
+            queries, recs = _feed_plan(spark, plan, dirs, "run", tracer,
+                                       ref)
+        except Exception:
+            failed.append(("job", traceback.format_exc(limit=3)))
+    jit_s = engine_cpu()[1] - jit0
+    if len(recs) < len(plan.groups()):
+        failed.append(("job", "some files were never consumed"))
+        spark.stop()
+        return _failed_result(failed, setup_s, rss)
 
     names = [_file_name(k) for k in range(len(plan.files))]
     progress = {q: _progress(queries[q]) for q in QUERIES}
@@ -325,41 +411,64 @@ def run(ctx) -> dict:
                        - p["durationMs"].get("triggerExecution", 0) / 1e3,
                        _end_time(p), query=q, batch=p["batchId"],
                        rows=p["numInputRows"])
-    per_query = {q: _consumed_at(queries[q],
+    per_query = {q: _consumed_at(progress[q],
                                  os.path.join(dirs["ckpt"], f"run-{q}"),
                                  names) for q in QUERIES}
-    done = [max(t[k] for t in per_query.values())
+    done = [max(t[k][1] for t in per_query.values())
             if all(t[k] is not None for t in per_query.values()) else None
             for k in range(len(names))]
     if any(d is None for d in done):
-        failed.append(("job", "some files were never consumed"))
-    steady = range(plan.n_steady)
-    lat = [done[k] - gen.due[k] for k in steady if done[k] is not None]
-    burst_due = gen.due[-1]
+        failed.append(("job", "a consumed file has no micro-batch"))
+    steady = recs[:plan.n_steady]
+    lat = [done[k] - steady[k]["written"] for k in range(plan.n_steady)
+           if done[k] is not None]
+    burst = recs[-1]
     burst_done = [d for d in done[-plan.n_burst:] if d is not None]
-    drain_s = max(burst_done) - burst_due if burst_done else 0.0
+    drain_s = max(burst_done) - burst["written"] if burst_done else 0.0
+    cpu_s = sum(r["cpu_s"] for r in recs)
+    ref_s = ref.mean()
 
     failed += _verify(spark, plan, progress)
-    layer = _layer_metrics(plan, gen, progress, per_query, session_s) \
+    layer = _layer_metrics(plan, recs, progress, per_query, session_s) \
         if ctx.trace else {}
     spark.stop()
     bad = {q for q, _ in failed}
     return {
         "attempted": len(QUERIES),
-        # a failed job or generator fails every query of the job
+        # a failed job fails every query of the job
         "failed": len(QUERIES) if bad - set(QUERIES) else len(bad),
         "errors": failed,
         "setup_s": setup_s, "peak_rss_mb": rss.peak_bytes / 2**20,
         "latency": stats.summary(lat) if lat else None,
+        "cpu": stats.summary([r["cpu_s"] for r in steady]),
+        "ref_cpu_s": ref_s, "ref_samples": ref.samples,
+        "cost": stats.summary([r["cpu_s"] / ref_s for r in steady]),
+        "cost_geomean": stats.geomean([r["cpu_s"] / ref_s
+                                       for r in steady]),
+        "cost_per_op": cpu_s / len(names) / ref_s,
+        "cpu_s": cpu_s, "jit_cpu_s": jit_s,
+        "cpu_s_per_op": cpu_s / len(names),
+        "burst_cpu_s_per_file": burst["cpu_s"] / plan.n_burst,
         "steady_latency_s": lat,
+        "per_group": [{"wall_s": r["done"] - r["written"],
+                       "cpu_s": r["cpu_s"]} for r in recs],
         "files": len(names), "burst_files": plan.n_burst,
-        "offered_events_per_s": EVENTS_PER_FILE / PERIOD_S,
         "catchup_events_per_s": plan.burst_events / drain_s
         if drain_s > 0 else 0.0,
         "ops_per_min": 60.0 * plan.n_burst / drain_s if drain_s > 0
         else 0.0,
         "layer": layer,
     }
+
+
+def _failed_result(failed: list, setup_s: float, rss) -> dict:
+    return {"attempted": len(QUERIES), "failed": len(QUERIES),
+            "errors": failed, "setup_s": setup_s,
+            "peak_rss_mb": rss.peak_bytes / 2**20, "latency": None,
+            "cpu": None, "cpu_s": 0.0, "cpu_s_per_op": 0.0, "jit_cpu_s": 0.0,
+            "ref_cpu_s": 0.0, "cost": None, "cost_geomean": 0.0,
+            "cost_per_op": 0.0,
+            "catchup_events_per_s": 0.0, "ops_per_min": 0.0, "layer": {}}
 
 
 def _verify(spark, plan: StreamPlan, progress: dict) -> list:
@@ -391,7 +500,9 @@ def _verify(spark, plan: StreamPlan, progress: dict) -> list:
     return failed
 
 
-def _layer_metrics(plan, gen, progress, per_query, session_s) -> dict:
+def _layer_metrics(plan, recs, progress, per_query, session_s) -> dict:
+    written = [recs[g]["written"] for g, ks in enumerate(plan.groups())
+               for _ in ks]
     batches = [p for plist in progress.values() for p in plist
                if p["numInputRows"] > 0]
 
@@ -407,14 +518,18 @@ def _layer_metrics(plan, gen, progress, per_query, session_s) -> dict:
 
     backlog = []
     for q, plist in progress.items():
-        ends = sorted(t for t in per_query[q] if t is not None)
+        ends = sorted(t[1] for t in per_query[q] if t is not None)
         for p in plist:
             if p["numInputRows"] == 0:
                 continue
             begin = _end_time(p) - p["durationMs"]["triggerExecution"] / 1e3
-            written = sum(1 for w in gen.written if 0 < w <= begin)
-            consumed = sum(1 for e in ends if e <= begin)
-            backlog.append(written - consumed)
+            backlog.append(sum(1 for w in written if w <= begin)
+                           - sum(1 for e in ends if e <= begin))
+    # from a file's publication to the start of the first micro-batch,
+    # across the queries, that read it
+    found = [min(t[k][0] for t in per_query.values()) - written[k]
+             for k in range(plan.n_steady)
+             if all(t[k] is not None for t in per_query.values())]
     return {
         "session.start_s": session_s,
         "streaming.batch_s": med(dur("triggerExecution")),
@@ -437,7 +552,6 @@ def _layer_metrics(plan, gen, progress, per_query, session_s) -> dict:
         "sources.get_batch_s": med(dur("getBatch")),
         "sources.backlog_files": (sum(backlog) / len(backlog)
                                   if backlog else 0.0),
-        "sources.gen_lag_s": med([w - d for w, d in zip(gen.written,
-                                                       gen.due) if w]),
+        "sources.gen_lag_s": med(found),
     }
 

@@ -1,7 +1,7 @@
 """Repository benchmark: two workloads against the package's public
 entry points, every result verified.
 
-    python3 perfbench/run.py --workload batch_ops --seed 1 --seconds 24 \
+    python3 perfbench/run.py --workload batch_ops --seed 1 --seconds 20 \
         --trace 0
 
 Workloads (see BENCHMARK.json for why each was chosen):
@@ -9,15 +9,23 @@ Workloads (see BENCHMARK.json for why each was chosen):
 - ``batch_ops``    closed loop over the TPC-H / relational / window /
                    join / graph registry queries and the LLM-pipeline
                    faces;
-- ``event_stream`` open loop: a file generator feeding one streaming
-                   job of three queries;
+- ``event_stream`` a paced file feed through one streaming job of
+                   three queries;
 - ``all``          each of the above in its own process, untraced
                    and, with ``--trace 1``, traced as well.
 
-``--trace 0`` measures the end-to-end metrics; ``--trace 1`` records
-spans, per-op job counts and the Spark event log and reports the
-per-layer metrics instead, plus the tracing overhead against the
-untraced run of the same workload and seed when one exists. The last
+``--trace 0`` measures the end-to-end metrics. The gated ones are
+``setup_s`` and two op costs: an op's CPU time over the CPU time of a
+fixed reference task measured through the same run
+(``tracing.ReferenceWork``), as a geometric mean over ops
+(``op_cost.geomean``) and as the timed phase's total over its ops
+(``cost_per_op``). Wall-clock latency and throughput are printed, with
+CPU seconds, on the line before the result; on a shared host they move
+with the neighbours' load by more than any bound a change could be
+held to. ``--trace 1`` records spans, per-op job counts and the Spark
+event log and reports the per-layer metrics instead, plus the tracing
+overhead against the untraced run of the same workload and seed when
+one exists. The last
 line of standard output is one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}``.
 
@@ -47,10 +55,8 @@ PACKAGE = "flink_1_11_2_with_comments_spark"
 WORKLOADS = ("batch_ops", "event_stream")
 DRIVER_HEAP = "4g"
 
-END_TO_END = {
-    "setup_s": "s", "op_latency_s.p50": "s", "op_latency_s.tail": "s",
-    "ops_per_min": "ops/min",
-}
+END_TO_END = {"setup_s": "s", "op_cost.geomean": "ref",
+              "cost_per_op": "ref"}
 
 
 def _per_layer_units() -> dict[str, str]:
@@ -102,13 +108,19 @@ def spark_settings(work_dir: str, cpus: int, trace: bool) -> dict:
         confs["spark.eventLog.compress"] = "false"
         confs["spark.eventLog.dir"] = "file://" + os.path.join(work_dir,
                                                                "eventlog")
+    # -Xms: a heap that starts at its full size and never shrinks, so
+    # the young-generation collections an op pays for do not depend on
+    # how far the heap had grown back after the last full collection.
+    # The compiler-thread flag is there for tracing.engine_cpu.
     return {
         "SPARK_GRAFT_CPUS": str(cpus),
         "SPARK_GRAFT_DRIVER_MEM": DRIVER_HEAP,
         "SPARK_LOCAL_DIRS": os.path.join(work_dir, "spark-local"),
         "TMPDIR": tmp,
         "spark_conf": confs,
-        "driver_java_options": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        "driver_java_options": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+                               " -XX:-UseDynamicNumberOfCompilerThreads"
+                               f" -Xms{DRIVER_HEAP}",
     }
 
 
@@ -161,8 +173,11 @@ def _metric(value: float, unit: str) -> dict:
 def report(workload: str, res: dict) -> tuple[dict, dict]:
     """(every end-to-end metric with its sample count, for a reader,
     the BENCHMARK.json end-to-end metrics, for the last line)."""
-    lat = res["latency"] or {"p50": 0.0, "tail": 0.0, "q1": 0.0,
-                             "q3": 0.0, "n": 0, "tail_pct": 50.0}
+    empty = {"p50": 0.0, "tail": 0.0, "q1": 0.0, "q3": 0.0, "n": 0,
+             "tail_pct": 50.0}
+    lat = res["latency"] or empty
+    cpu = res["cpu"] or empty
+    cost = res["cost"] or empty
     common = {
         "setup_s": _metric(res["setup_s"], "s"),
         "error_rate": _metric(res["failed"] / res["attempted"], "ratio"),
@@ -171,6 +186,17 @@ def report(workload: str, res: dict) -> tuple[dict, dict]:
     prefix = "event_latency_s" if workload == "event_stream" \
         else "op_latency_s"
     named = {
+        "op_cpu_s.p50": {**_metric(cpu["p50"], "s"), "n": cpu["n"],
+                         "q1": cpu["q1"], "q3": cpu["q3"]},
+        "op_cpu_s.tail": {**_metric(cpu["tail"], "s"), "n": cpu["n"],
+                          "percentile": cpu["tail_pct"]},
+        "cpu_s_per_op": _metric(res["cpu_s_per_op"], "s"),
+        "jit_cpu_s": _metric(res["jit_cpu_s"], "s"),
+        "ref_cpu_s": _metric(res["ref_cpu_s"], "s"),
+        "op_cost.p50": {**_metric(cost["p50"], "ref"), "n": cost["n"],
+                        "q1": cost["q1"], "q3": cost["q3"]},
+        "op_cost.geomean": _metric(res["cost_geomean"], "ref"),
+        "cost_per_op": _metric(res["cost_per_op"], "ref"),
         f"{prefix}.p50": {**_metric(lat["p50"], "s"), "n": lat["n"],
                           "q1": lat["q1"], "q3": lat["q3"]},
         f"{prefix}.tail": {**_metric(lat["tail"], "s"), "n": lat["n"],
@@ -179,15 +205,11 @@ def report(workload: str, res: dict) -> tuple[dict, dict]:
     if workload == "event_stream":
         named["catchup_events_per_s"] = _metric(
             res["catchup_events_per_s"], "events/s")
-        named["offered_events_per_s"] = _metric(
-            res["offered_events_per_s"], "events/s")
     else:
         named["ops_per_min"] = _metric(res["ops_per_min"], "ops/min")
-    gated = {
-        "setup_s": res["setup_s"], "op_latency_s.p50": lat["p50"],
-        "op_latency_s.tail": lat["tail"],
-        "ops_per_min": res["ops_per_min"],
-    }
+    gated = {"setup_s": res["setup_s"],
+             "op_cost.geomean": res["cost_geomean"],
+             "cost_per_op": res["cost_per_op"]}
     return ({**common, **named},
             {k: _metric(v, END_TO_END[k]) for k, v in gated.items()})
 
@@ -256,8 +278,8 @@ def _overhead(untraced_path: str, traced: dict) -> dict | None:
         return None
     with open(untraced_path) as f:
         base = json.load(f)["result"]
-    pairs = {"op_latency_s.p50": (base["latency"] or {}).get("p50"),
-             "ops_per_min": base["ops_per_min"]}
+    pairs = {"op_cost.geomean": base["cost_geomean"],
+             "cost_per_op": base["cost_per_op"]}
     return {k: (traced[k]["value"] / v - 1.0) if v else None
             for k, v in pairs.items()}
 

@@ -22,6 +22,12 @@ def median(xs: list[float]) -> float:
     return statistics.median(xs)
 
 
+def geomean(xs: list[float]) -> float:
+    """Geometric mean: every sample moves it by the same factor for the
+    same relative change, whatever its size."""
+    return statistics.geometric_mean(xs)
+
+
 def percentile(xs: list[float], p: float) -> float:
     """Linear-interpolated percentile (numpy's default method)."""
     s = sorted(xs)

@@ -19,6 +19,10 @@ import threading
 import time
 
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+_TICK = os.sysconf("SC_CLK_TCK")
+REF_INTS = 1 << 20
+REF_SEED = 7
+REF_WARMUP = 5
 
 
 class Tracer:
@@ -75,23 +79,6 @@ def wrap_calls(module, attr: str, on_call) -> None:
     setattr(module, attr, wrapper)
 
 
-def wait_for_jit(spark, poll_s: float = 0.5, cap_s: float = 10.0) -> None:
-    """Return once the Spark driver JVM's JIT compilers go quiet (under
-    5% of one thread over ``poll_s``), or after ``cap_s``. Warm-up
-    queues compilations that otherwise compete with the first timed
-    ops."""
-    bean = (spark.sparkContext._jvm.java.lang.management
-            .ManagementFactory.getCompilationMXBean())
-    deadline = time.perf_counter() + cap_s
-    last = bean.getTotalCompilationTime()
-    while time.perf_counter() < deadline:
-        time.sleep(poll_s)
-        now = bean.getTotalCompilationTime()
-        if now - last < poll_s * 1000 * 0.05:
-            return
-        last = now
-
-
 class RssSampler:
     """Peak summed RSS of every descendant of this process (the Spark
     driver JVM and the Python workers it forks), sampled from /proc."""
@@ -117,7 +104,9 @@ class RssSampler:
                 return
 
 
-def _ppid_map() -> dict[int, int]:
+def _proc_table() -> dict[int, tuple[int, int]]:
+    """pid -> (parent pid, CPU clock ticks: user, system and those of
+    reaped children) for every process on the machine."""
     out = {}
     for stat in glob.glob("/proc/[0-9]*/stat"):
         try:
@@ -126,14 +115,15 @@ def _ppid_map() -> dict[int, int]:
         except OSError:
             continue
         # comm may contain spaces; fields resume after the last ')'
-        out[int(raw[:raw.index(" ")])] = int(raw[raw.rindex(")") + 2:]
-                                             .split()[1])
+        fields = raw[raw.rindex(")") + 2:].split()
+        out[int(raw[:raw.index(" ")])] = (
+            int(fields[1]), sum(int(x) for x in fields[11:15]))
     return out
 
 
-def descendants() -> list[int]:
+def _descendants(table: dict[int, tuple[int, int]]) -> list[int]:
     children: dict[int, list[int]] = {}
-    for pid, ppid in _ppid_map().items():
+    for pid, (ppid, _) in table.items():
         children.setdefault(ppid, []).append(pid)
     found, todo = [], [os.getpid()]
     while todo:
@@ -141,6 +131,50 @@ def descendants() -> list[int]:
             found.append(c)
             todo.append(c)
     return found
+
+
+def descendants() -> list[int]:
+    return _descendants(_proc_table())
+
+
+# HotSpot's JIT compiler threads; the benchmark starts the JVM with a
+# fixed set of them (-XX:-UseDynamicNumberOfCompilerThreads), so none
+# exits and takes its CPU time out of the per-thread sum
+_JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def _jit_ticks(pid: int) -> int:
+    total = 0
+    for stat in glob.glob(f"/proc/{pid}/task/[0-9]*/stat"):
+        try:
+            with open(stat) as f:
+                raw = f.read()
+        except OSError:
+            continue
+        if raw[raw.index("(") + 1:raw.rindex(")")].startswith(_JIT_THREADS):
+            total += sum(int(x) for x in
+                         raw[raw.rindex(")") + 2:].split()[11:13])
+    return total
+
+
+def engine_cpu() -> tuple[float, float]:
+    """CPU seconds used so far by every descendant of this process (the
+    Spark driver JVM, the Python workers it forks, and their reaped
+    children), as (all but the JVM's JIT compiler threads, those
+    threads).
+
+    The kernel's per-task accounting leaves out time the hypervisor
+    stole from the virtual CPUs, so unlike wall time this does not grow
+    when neighbouring guests load the host. JIT compilation is kept
+    apart because it is the JVM tuning itself, not the work an op asked
+    for: it goes on through the whole run, about as much CPU as the ops'
+    own work, however long the warm-up."""
+    table = _proc_table()
+    ticks, jit = 0, 0
+    for pid in _descendants(table):
+        ticks += table[pid][1]
+        jit += _jit_ticks(pid)
+    return (ticks - jit) / _TICK, jit / _TICK
 
 
 def descendants_rss() -> int:
@@ -152,6 +186,50 @@ def descendants_rss() -> int:
         except OSError:
             continue
     return total
+
+
+class ReferenceWork:
+    """A fixed piece of JVM work that involves none of the program:
+    sorting a copy of the same ``REF_INTS`` pseudo-random ints in the
+    Spark driver JVM, timed in CPU seconds.
+
+    On a shared host the CPU time of the same work moves by a fifth and
+    more from run to run: other guests on the same cores, caches and
+    memory slow every instruction, and the kernel's accounting cannot
+    tell that from the program's own work. The reference slows with
+    them, so an op's CPU time divided by the run's mean reference time
+    compares across runs where neither compares alone. One sample moves
+    by up to a fifth on its own, the slow ones more often while the host
+    is busy; the mean is over the 24 to 40 samples a run takes,
+    interleaved with its ops."""
+
+    def __init__(self, spark):
+        jvm = spark.sparkContext._jvm
+        self._arrays = jvm.java.util.Arrays
+        self._bean = (jvm.java.lang.management.ManagementFactory
+                      .getThreadMXBean())
+        self._system = jvm.java.lang.System
+        self._data = jvm.java.util.Random(REF_SEED).ints(REF_INTS) \
+            .toArray()
+        # sorted in place: a sample allocates nothing, so no heap
+        # growth or collection falls inside it
+        self._work = jvm.java.util.Arrays.copyOf(self._data, REF_INTS)
+        self.samples: list[float] = []
+        self.measure(REF_WARMUP)  # compiles the sort before it counts
+        self.samples.clear()
+
+    def measure(self, times: int = 1) -> None:
+        # py4j runs every call from this Python thread on one JVM
+        # thread, so the thread's CPU clock brackets the sort alone
+        for _ in range(times):
+            t0 = self._bean.getCurrentThreadCpuTime()
+            self._system.arraycopy(self._data, 0, self._work, 0, REF_INTS)
+            self._arrays.sort(self._work)
+            self.samples.append(
+                (self._bean.getCurrentThreadCpuTime() - t0) / 1e9)
+
+    def mean(self) -> float:
+        return statistics.fmean(self.samples)
 
 
 def cpu_jiffies() -> tuple[int, int]:
